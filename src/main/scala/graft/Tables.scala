@@ -54,18 +54,13 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame   = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
 
-  /** `events.ts` has shipped as BOTH parquet TIMESTAMP(NANOS) (rounds ≤6)
-    * and TIMESTAMP(MICROS) (r7 regenerated testdata), so branch on the
-    * type the reader actually produced rather than assuming a generation:
-    * NANOS arrives as long (nanosAsLong — Spark's vectorized reader
-    * rejects nanos natively) and converts with integral DIV (a double
-    * division would lose precision above 2^53 — epoch-nanos is ~1.7e18;
-    * the data is µs-aligned, so DIV is lossless); MICROS arrives as a
-    * timestamp already and only needs the NTZ→session-TZ cast (session TZ
-    * is UTC, so values are unchanged and literal comparisons keep
-    * working). */
+  /** `events.ts` is parquet TIMESTAMP(MICROS): it arrives as a timestamp
+    * and only needs the NTZ→session-TZ cast (session TZ is UTC, so values
+    * are unchanged and literal comparisons keep working). A plain INT64
+    * `ts` of epoch nanos arrives as long and converts with integral DIV
+    * (a double division would lose precision above 2^53 — epoch-nanos is
+    * ~1.7e18; the data is µs-aligned, so DIV is lossless). */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -117,10 +117,6 @@ object SemDedup extends QueryModule {
         .select(col("cell"), col("centroid"), col("cnrm"))
     }
 
-  /** Test hook: drop the cached centroid model (rewritten-fixture rebuilds). */
-  private[graft] def clearCentroidModelCache(): Unit =
-    graft.ModelFrames.clear("semdedup_centroids")
-
   def semantic(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val n = e.withColumn("nrm", norm(col("embedding")))

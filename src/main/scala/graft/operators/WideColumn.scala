@@ -157,23 +157,6 @@ object WideColumn extends QueryModule {
     * driver literals for the In() pushdown to exist at all. Table write
     * amortized via the prebuilt-lifecycle cache (one write per corpus,
     * every run after serves reads only — the nightly-build shape). */
-  /** Test hook (prebuilt-cache convention; semantics at
-    * [[graft.PrebuiltDirs]]) — clears BOTH connector-backed tables. */
-  private[graft] def clearConnectorCache(): Unit = {
-    graft.PrebuiltDirs.clear("graft_connector_orders")
-    graft.PrebuiltDirs.clear("graft_connector_users")
-    graft.PrebuiltDirs.clear("graft_connector_snap")
-    graft.PrebuiltDirs.clear("graft_connector_del")
-    graft.PrebuiltDirs.clear("graft_connector_cmp")
-    graft.PrebuiltDirs.clear("graft_connector_ttl")
-    graft.PrebuiltDirs.clear("graft_connector_ups")
-    graft.PrebuiltDirs.clear("graft_connector_cpk")
-    graft.PrebuiltDirs.clear("graft_connector_cck")
-    graft.PrebuiltDirs.clear("graft_connector_alt")
-    graft.PrebuiltDirs.clear("graft_connector_ckr")
-    graft.PrebuiltDirs.clear("graft_connector_cell")
-    graft.PrebuiltDirs.clear("graft_connector_sql")
-  }
 
   private def connectorOrdersDir(s: SparkSession, d: String): String =
     graft.PrebuiltDirs.cached("graft_connector_orders", d) { dir =>
@@ -424,9 +407,8 @@ object WideColumn extends QueryModule {
     * pinned scan reads exactly the old version — a current-version read
     * would include the second append and flip the hash. The Iceberg/
     * Delta time-travel surface, earned by the manifest the atomic
-    * commit already needed. Versions on a fresh table: v1 = the empty
-    * pre-move pin, v2 = first append, v3 = second — the entry pins
-    * versions(dir)(1). */
+    * commit already needed. Versions on a fresh table: v1 = first
+    * append, v2 = second — the entry pins versions(dir).head. */
   private def connectorSnapDir(s: SparkSession, d: String): String =
     graft.PrebuiltDirs.cached("graft_connector_snap", d) { dir =>
       val fmt = classOf[graft.sources.connector.TokenRangeSource].getName
@@ -444,7 +426,7 @@ object WideColumn extends QueryModule {
 
   def connectorSnapshotRead(s: SparkSession, d: String): DataFrame = {
     val dir = connectorSnapDir(s, d)
-    val asOf = graft.sources.connector.TokenRangeSource.versions(dir)(1)
+    val asOf = graft.sources.connector.TokenRangeSource.versions(dir).head
     s.read.format(classOf[graft.sources.connector.TokenRangeSource].getName)
       .option("pk", "o_orderkey").option("version", asOf.toString).load(dir)
       .groupBy("o_orderstatus")

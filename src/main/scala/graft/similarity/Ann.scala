@@ -1549,13 +1549,6 @@ object Ann extends QueryModule {
   // switch); (b) the cache keys on the corpus PATH and assumes the test
   // corpora are immutable — a production index tracks source snapshot
   // versions and rebuilds on change.
-  /** Test hook (ADVICE r4): drop the per-JVM index cache so a rewritten
-    * fixture corpus rebuilds instead of serving a stale index. Production
-    * invalidation keys on source snapshot versions, not this (cache
-    * semantics: [[graft.PrebuiltDirs]]). */
-  private[graft] def clearPrebuiltIndexCache(): Unit =
-    graft.PrebuiltDirs.clear("graft_ivf_index")
-
   private def prebuiltIndexDir(s: SparkSession, d: String): String =
     graft.PrebuiltDirs.cached("graft_ivf_index", d) { dir =>
     val e = withNorm(Tables.embeddings(s, d))

@@ -85,8 +85,8 @@ final class MessageStore(spark: SparkSession, keyspace: String) {
     // (the spec is fixed at creation; re-registering the catalog entry
     // with a contradicting literal would make every insert refuse —
     // r14 review's upgrade-path break).
-    val msgCk = graft.sources.connector.TokenRangeSource
-      .recordedCk(tablePath("messages")).getOrElse("write_seq DESC")
+    val msgCk = graft.sources.connector.TableMeta
+      .load(tablePath("messages")).ck.getOrElse("write_seq DESC")
     spark.sql(
       s"""CREATE TABLE IF NOT EXISTS $messagesT (
          |  channel_id BIGINT, write_seq BIGINT, message_id STRING,

@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - `CREATE NAMESPACE graft.ks`                 — the keyspace dir
   *   - `CREATE TABLE graft.ks.t (...) TBLPROPERTIES('pk'='...', 'ck'='...')`
   *     — records the partition/clustering keys and the creation schema via
-  *     the same `table.properties` the first sink commit would
+  *     the same [[TableMeta]] creation record the first sink commit would
   *   - `INSERT INTO graft.ks.t ...` / `SELECT ... FROM graft.ks.t`
   *     — the DSv2 write/read paths (pushdown, atomic publish) unchanged
   *   - `ALTER TABLE graft.ks.t ADD COLUMNS (x STRING)` / `DROP COLUMN x`
@@ -131,13 +131,14 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       val base = Identifier.of(ident.namespace(), n.stripSuffix("$changes"))
       if (tableExists(base)) {
         val path = tableDir(base).getAbsolutePath
-        val schema = TokenRangeSource.storedSchema(path).getOrElse(
+        val meta = TableMeta.load(path)
+        val schema = meta.storedSchema.getOrElse(
           throw new IllegalStateException(
             s"token-range table ${base.name()} at $path has no stored schema"))
         val props = new java.util.HashMap[String, String]()
         props.put("path", path)
         props.put("changeFeed", "true")
-        TokenRangeSource.recordedPk(path).foreach(props.put("pk", _))
+        meta.pk.foreach(props.put("pk", _))
         return new TokenRangeTable(
           org.apache.spark.sql.types.StructType(schema.fields :+
             org.apache.spark.sql.types.StructField(
@@ -186,25 +187,25 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         catalogName +: ident.namespace().toSeq :+ ident.name())
     val path = tableDir(ident).getAbsolutePath
-    val schema = TokenRangeSource.storedSchema(path).getOrElse(
+    val meta = TableMeta.load(path)
+    val schema = meta.storedSchema.getOrElse(
       throw new IllegalStateException(
         s"token-range table ${ident.name()} at $path has no stored schema"))
     val props = new java.util.HashMap[String, String]()
     props.put("path", path)
-    TokenRangeSource.recordedPk(path).foreach(props.put("pk", _))
-    TokenRangeSource.recordedCk(path).foreach(props.put("ck", _))
-    TokenRangeSource.recordedDml(path).foreach(props.put("dml", _))
+    meta.pk.foreach(props.put("pk", _))
+    meta.ck.foreach(props.put("ck", _))
+    meta.dml.foreach(props.put("dml", _))
     // merge-on-read tables surface their pk as NOT NULL — truthful (the
     // sink refuses null partition keys). Since r17 the delta row id is
     // the (_file, _pos) metadata pair (both declared non-nullable), so
     // this is no longer load-bearing for Spark's row-id nullability
     // check — kept because it is simply the more accurate schema.
     val served =
-      if (!TokenRangeSource.recordedDml(path).exists(_.equalsIgnoreCase("mor")))
+      if (!meta.dml.exists(_.equalsIgnoreCase("mor")))
         schema
       else {
-        val pkL = TokenRangeSource.recordedPk(path)
-          .map(_.split(',').map(_.trim.toLowerCase).toSet).getOrElse(Set.empty)
+        val pkL = meta.pkNames.map(_.toLowerCase).toSet
         StructType(schema.fields.map(f =>
           if (pkL(f.name.toLowerCase)) f.copy(nullable = false) else f))
       }
@@ -262,8 +263,8 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
     d.getAbsolutePath
   }
 
-  private def recordedPkOf(dir: String): String =
-    TokenRangeSource.recordedPk(dir).getOrElse(throw new IllegalStateException(
+  private def pkOf(dir: String): String =
+    TableMeta.load(dir).pk.getOrElse(throw new IllegalStateException(
       s"token-range table at $dir has no recorded pk"))
 
   private abstract class Proc(procName: String, doc: String,
@@ -292,7 +293,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       override def run(in: InternalRow): Unit = {
         val dir = resolveTable(in.getUTF8String(0).toString)
         TokenRangeOps.compact(org.apache.spark.sql.SparkSession.active,
-          dir, recordedPkOf(dir))
+          dir, pkOf(dir))
       }
     },
     "vacuum" -> new Proc("vacuum",
@@ -308,7 +309,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       "keep the newest N versions; every commit beyond sweeps best-effort",
       Array(tableParam, ProcedureParameter.in("keep_versions", IntegerType).build())) {
       override def run(in: InternalRow): Unit =
-        TokenRangeOps.setRetention(
+        TableMeta.setRetention(
           resolveTable(in.getUTF8String(0).toString), in.getInt(1))
     },
     "expire" -> new Proc("expire",
@@ -318,7 +319,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       override def run(in: InternalRow): Unit = {
         val dir = resolveTable(in.getUTF8String(0).toString)
         TokenRangeOps.expire(org.apache.spark.sql.SparkSession.active,
-          dir, recordedPkOf(dir), in.getUTF8String(1).toString, in.getLong(2))
+          dir, pkOf(dir), in.getUTF8String(1).toString, in.getLong(2))
       }
     },
     "create_index" -> new Proc("create_index",
@@ -346,7 +347,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       Array(tableParam,
         ProcedureParameter.in("compact_after", IntegerType).build())) {
       override def run(in: InternalRow): Unit =
-        TokenRangeOps.setVectorCompaction(
+        TableMeta.setVectorCompaction(
           resolveTable(in.getUTF8String(0).toString), in.getInt(1))
     },
     "compact_fragmented" -> new Proc("compact_fragmented",
@@ -365,20 +366,20 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       Array(tableParam,
         ProcedureParameter.in("files_per_bucket", IntegerType).build())) {
       override def run(in: InternalRow): Unit =
-        TokenRangeOps.setFileCompaction(
+        TableMeta.setFileCompaction(
           resolveTable(in.getUTF8String(0).toString), in.getInt(1))
     },
     "enable_change_feed" -> new Proc("enable_change_feed",
       "record change sidecars on rewrites; serve them via changeFeed reads",
       Array(tableParam)) {
       override def run(in: InternalRow): Unit =
-        TokenRangeOps.enableChangeFeed(resolveTable(in.getUTF8String(0).toString))
+        TableMeta.enableChangeFeed(resolveTable(in.getUTF8String(0).toString))
     },
     "disable_change_feed" -> new Proc("disable_change_feed",
       "stop recording change sidecars on rewrites",
       Array(tableParam)) {
       override def run(in: InternalRow): Unit =
-        TokenRangeOps.disableChangeFeed(resolveTable(in.getUTF8String(0).toString))
+        TableMeta.disableChangeFeed(resolveTable(in.getUTF8String(0).toString))
     })
 
   override def loadProcedure(ident: Identifier): UnboundProcedure = {
@@ -402,15 +403,15 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         catalogName +: ident.namespace().toSeq :+ ident.name())
     val path = tableDir(ident).getAbsolutePath
-    val schema = TokenRangeSource.storedSchemaAt(path, v)
-      .orElse(TokenRangeSource.storedSchema(path))
+    val meta = TableMeta.load(path)
+    val schema = meta.storedSchemaAt(TokenRangeSource.readVersion(path, v))
       .getOrElse(throw new IllegalStateException(
         s"token-range table ${ident.name()} at $path has no stored schema"))
     val props = new java.util.HashMap[String, String]()
     props.put("path", path)
     props.put("version", v.toString)
-    TokenRangeSource.recordedPk(path).foreach(props.put("pk", _))
-    TokenRangeSource.recordedCk(path).foreach(props.put("ck", _))
+    meta.pk.foreach(props.put("pk", _))
+    meta.ck.foreach(props.put("ck", _))
     new TokenRangeTable(schema, new CaseInsensitiveStringMap(props))
   }
 
@@ -498,7 +499,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
     // the same creation record the first sink commit writes — created
     // empty here (CREATE-then-INSERT, the CQL flow), and the _manifests
     // dir marks table existence
-    TokenRangeSource.recordPk(dir.getAbsolutePath, pkCols.mkString(","),
+    TableMeta.recordCreation(dir.getAbsolutePath, pkCols.mkString(","),
       ck, Some(schema.toDDL), dml, fallbackRows, index, insertMode)
     // OPT-IN fragmentation auto-compaction (r18): a bucket reaching N
     // live files folds in the next append's tail (fileSweep)
@@ -507,7 +508,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
         require(n == 0 || n >= 2,
           s"TBLPROPERTIES('compact.files_per_bucket') must be 0 (off) or " +
             s">= 2, got $n")
-        TokenRangeOps.setFileCompaction(dir.getAbsolutePath, n)
+        TableMeta.setFileCompaction(dir.getAbsolutePath, n)
       }
     loadTable(ident)
   }
@@ -526,7 +527,7 @@ final class TokenRangeCatalog extends TableCatalog with SupportsNamespaces
           "token-range ALTER drops top-level columns only")
         TokenRangeOps.dropColumn(path, del.fieldNames()(0))
       case p: TableChange.SetProperty if p.property() == "retention" =>
-        TokenRangeOps.setRetention(path, p.value().toInt)
+        TableMeta.setRetention(path, p.value().toInt)
       case other => throw new UnsupportedOperationException(
         s"token-range ALTER supports ADD COLUMNS / DROP COLUMN / " +
           s"SET TBLPROPERTIES('retention'=N), got $other")
@@ -583,10 +584,10 @@ private[connector] final class TokenRangeHistoryTable(path: String)
         override def description(): String =
           s"TokenRangeHistoryScan path=$path"
         override def planInputPartitions(): Array[InputPartition] = {
-          val rows = TokenRangeSource.history(path).map { case (v, ms, nf) =>
-            (v, ms * 1000L, nf,
-              TokenRangeSource.opKindAt(path, v).getOrElse("append"),
-              TokenRangeSource.dvBindings(path, Some(v)).size)
+          val rows = TokenRangeSource.versions(path).map { v =>
+            val tv = TokenRangeSource.readVersion(path, v)
+            (v, TokenRangeSource.publishedAt(path, v) * 1000L, tv.files.size,
+              tv.op, tv.dvBindings.size)
           }.toArray
           Array(TokenRangeHistoryPartition(rows))
         }

@@ -85,8 +85,8 @@ private[connector] final class TokenRangeDeltaOperation(
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new DeltaWrite {
         override def toBatch: DeltaBatchWrite =
-          new TokenRangeDeltaBatchWrite(path, tableSchema, info.schema(),
-            pinned, cmd)
+          new TokenRangeDeltaBatchWrite(path, TableMeta.load(path),
+            info.schema(), pinned, cmd)
       }
     }
 }
@@ -98,7 +98,7 @@ private[connector] final case class TokenRangeDeltaCommit(
     extends WriterCommitMessage
 
 private[connector] final class TokenRangeDeltaBatchWrite(path: String,
-    tableSchema: StructType, rowSchema: StructType,
+    meta: TableMeta, rowSchema: StructType,
     pinned: Option[Int], cmd: RowLevelOperation.Command)
     extends DeltaBatchWrite {
 
@@ -111,14 +111,14 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
     // the data writer is never constructed (lazy in the task writer)
     val pkIdx =
       if (rowSchema.fields.isEmpty) Nil
-      else TokenRangeSource.recordedPk(path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"token-range merge-on-read DML at $path requires a recorded pk"))
-        .split(',').map(_.trim).toSeq
-        .map(n => rowSchema.fieldIndex(
+      else {
+        if (meta.pk.isEmpty) throw new IllegalArgumentException(
+          s"token-range merge-on-read DML at $path requires a recorded pk")
+        meta.pkNames.map(n => rowSchema.fieldIndex(
           rowSchema.fieldNames.find(_.equalsIgnoreCase(n)).getOrElse(n)))
+      }
     new TokenRangeDeltaWriterFactory(path, rowSchema, pkIdx, writeId,
-      TokenRangeSource.indexIdxOf(path, rowSchema))
+      meta.indexIdxOf(rowSchema))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -154,17 +154,18 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
       if (tombRows == 0) Nil
       else tombs.select(TokenRangeSource.FileCol).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
+    val pinnedV = pinned.map(TokenRangeSource.readVersion(path, _))
     try {
-      if (tombRows > TokenRangeSource.recordedMorFallbackRows(path)) {
+      if (tombRows > meta.morFallbackRows) {
         // COPY-ON-WRITE FALLBACK: same statement, group rewrite — the
         // touched files' survivors (old vectors merged, this statement's
         // tombstoned positions dropped) plus the staged images republish
         // while the touched files retire, in one conflict-validated flip
         val cdfRel =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(TokenRangeOps.stageDeltaDmlSidecar(spark, path, pinned,
+          if (!meta.changeFeed) None
+          else Some(TokenRangeOps.stageDeltaDmlSidecar(spark, meta, pinnedV,
             touchedRel, staged.toSeq, tombs))
-        TokenRangeOps.morFallbackRewrite(spark, path, pinned, touchedRel,
+        TokenRangeOps.morFallbackRewrite(spark, meta, pinnedV, touchedRel,
           staged.toSeq, tombs, kind, cdfRel)
       } else {
         // CHANGE DATA FEED: pre-images are the tombstoned positions'
@@ -173,8 +174,8 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
         // also removed) or inserts — the same classification every other
         // op records
         val cdfRel =
-          if (!TokenRangeSource.changeFeedEnabled(path)) None
-          else Some(TokenRangeOps.stageDeltaDmlSidecar(spark, path, pinned,
+          if (!meta.changeFeed) None
+          else Some(TokenRangeOps.stageDeltaDmlSidecar(spark, meta, pinnedV,
             touchedRel, staged.toSeq, tombs))
         // the vector: the task tomb parquets move VERBATIM into one
         // `_dv/<uuid>/` sidecar dir (they already hold exactly the
@@ -209,8 +210,8 @@ private[connector] final class TokenRangeDeltaBatchWrite(path: String,
             dvSeenVersion = pinned)
         }
       }
-      TokenRangeOps.retentionSweep(path)
-      TokenRangeOps.vectorSweep(spark, path)
+      TokenRangeOps.retentionSweep(meta)
+      TokenRangeOps.vectorSweep(spark, meta)
     } finally
       TokenRangeSource.deleteRecursively(TokenRangeSource.stagingDir(path, writeId))
   }

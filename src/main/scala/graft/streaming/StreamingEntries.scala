@@ -159,11 +159,9 @@ object StreamingEntries extends QueryModule {
     drain(src.groupBy().count(), "complete")
   }
 
-  /** Streaming view of the events table (same nanos-or-micros `ts`
-    * normalization as Tables.events — branch on the type the reader
-    * produced, since the testdata has shipped both generations). */
+  /** Streaming view of the events table (same `ts` normalization as
+    * Tables.events). */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sch = graft.Tables.schemaOf(s, s"$d/events.parquet")
     val raw = s.readStream.schema(sch).parquet(stageDir(d, "events"))
     sch("ts").dataType match {
@@ -816,7 +814,7 @@ object StreamingEntries extends QueryModule {
       ev.write.format(fmt).option("pk", "event_id")
         .option("schema", "event_id BIGINT, event_type STRING, value DOUBLE")
         .mode("append").save(dir)
-      ops.enableChangeFeed(dir)
+      graft.sources.connector.TableMeta.enableChangeFeed(dir)
       val delKeys = ev.filter(col("event_id") % 97 === 0)
         .select("event_id").orderBy("event_id").limit(500)
         .collect().map(_.getLong(0)).toSeq

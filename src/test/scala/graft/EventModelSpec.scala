@@ -31,8 +31,8 @@ class EventModelSpec extends SparkSpec {
     }
     val s2 = spark
     import s2.implicits._
-    // ts stored as epoch-NANOS long — the TIMESTAMP(NANOS) shape
-    // Tables.events expects (nanosAsLong read + integral DIV conversion)
+    // ts stored as an epoch-NANOS long — Tables.events' integral DIV
+    // conversion branch
     val df = evs.toDF("event_id", "ts", "user_id", "event_type", "value")
     val d = java.nio.file.Files.createTempDirectory("graft_event_model")
     df.coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")

@@ -33,8 +33,8 @@ class MessageStoreSpec extends SparkSpec {
     assert(seqs.sameElements(seqs.sortBy(-_)), "clustering order must be newest-first")
     // r14: the reference's CLUSTERING ORDER BY ... DESC is PHYSICAL —
     // recorded at first declaration and enforced on every later write
-    assert(graft.sources.connector.TokenRangeSource
-      .recordedCk(store.tablePath("messages")).contains("write_seq DESC"))
+    assert(graft.sources.connector.TableMeta
+      .load(store.tablePath("messages")).ck.contains("write_seq DESC"))
     // upgrade path (r14 review): a keyspace whose messages table already
     // recorded a PRE-DESC spec keeps it — createTables re-registers the
     // recorded value instead of a contradicting literal, so inserts on
@@ -42,13 +42,13 @@ class MessageStoreSpec extends SparkSpec {
     locally {
       val ksOld = s"ks_pre_desc_${System.nanoTime()}"
       val old = new MessageStore(spark, ksOld)
-      graft.sources.connector.TokenRangeSource
+      graft.sources.connector.TableMeta
         .recordCk(old.tablePath("messages"), "write_seq ASC")
       old.createKeyspace(); old.createTables()
       old.insertMessages(Seq((9L, "u1", "legacy keyspace still writes")))
       assert(old.messages(9L).count() == 1)
-      assert(graft.sources.connector.TokenRangeSource
-        .recordedCk(old.tablePath("messages")).contains("write_seq ASC"))
+      assert(graft.sources.connector.TableMeta
+        .load(old.tablePath("messages")).ck.contains("write_seq ASC"))
       old.dropKeyspace()
     }
 
@@ -80,7 +80,7 @@ class MessageStoreSpec extends SparkSpec {
   }
 
   test("token-range connector: split planning, pk pushdown pruning, column pruning") {
-    import graft.sources.connector.{TokenLayout, TokenRangeSource}
+    import graft.sources.connector.TokenRangeSource
     val s2 = spark
     import s2.implicits._
     // a keyspace-shaped messages table, token-bucketed on the partition key
@@ -88,7 +88,8 @@ class MessageStoreSpec extends SparkSpec {
       (i % 37, i, s"m$i", s"u${i % 7}", s"message $i"))
     val df = rows.toDF("channel_id", "write_seq", "message_id", "author_id", "message")
     val dir = java.nio.file.Files.createTempDirectory("graft_tokenrange").toString
-    TokenLayout.writeTokenBucketed(df, "channel_id", dir)
+    df.write.format(classOf[TokenRangeSource].getName)
+      .option("pk", "channel_id").mode("append").save(dir)
 
     def load(splits: Int) = spark.read
       .format(classOf[TokenRangeSource].getName)

@@ -19,22 +19,21 @@ class StreamingEntriesSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getAs[Double]("tv"))).toMap
     assert(got == want, "the streamed table must equal the batch aggregate")
 
-    // the manifest history is the stream's commit log: empty pin + one
-    // version per micro-batch (4 staged files, maxFilesPerTrigger=1)
+    // the manifest history is the stream's commit log: one version per
+    // micro-batch (4 staged files, maxFilesPerTrigger=1)
     val dir = StreamingEntries.connectorStreamDir(spark, sf)
     val vs = TokenRangeSource.versions(dir)
-    assert(vs.size == 5, s"expected empty-pin + 4 batch commits, got $vs")
+    assert(vs.size == 4, s"expected 4 batch commits, got $vs")
     // version-pinned counts prefix-sum: each commit adds exactly one
     // whole batch (no torn batch is ever a readable state)
     val counts = vs.map(v => spark.read
       .format(classOf[TokenRangeSource].getName)
       .option("pk", "event_id").option("version", v.toString)
       .load(dir).count())
-    assert(counts.head == 0L)
     assert(counts == counts.sorted, s"commit log must be monotone: $counts")
     val total = Tables.events(spark, sf).count()
     assert(counts.last == total)
-    val batchSizes = counts.sliding(2).map(p => p(1) - p(0)).toSeq
+    val batchSizes = (0L +: counts).sliding(2).map(p => p(1) - p(0)).toSeq
     assert(batchSizes.forall(_ > 0) && batchSizes.sum == total)
   }
 

@@ -38,7 +38,7 @@ class TokenRangeAtomicitySpec extends SparkSpec {
     * the job itself deliberately NOT committed. */
   private def stage(dir: String, rows: Seq[(Long, String)],
       truncate: Boolean): (TokenRangeBatchWrite, Array[org.apache.spark.sql.connector.write.WriterCommitMessage]) = {
-    val bw = new TokenRangeBatchWrite(dir, schema, Seq(0), truncate)
+    val bw = new TokenRangeBatchWrite(dir, TableMeta.load(dir), schema, Seq(0), truncate)
     val w = bw.createBatchWriterFactory(null).createWriter(0, 0L)
     rows.foreach { case (k, v) =>
       w.write(new GenericInternalRow(Array[Any](k, UTF8String.fromString(v))))
@@ -140,37 +140,6 @@ class TokenRangeAtomicitySpec extends SparkSpec {
     }
   }
 
-  test("legacy table: first connector commit pins the physical listing as a manifest before any move") {
-    val s2 = spark; import s2.implicits._
-    val dir = freshDir()
-    // legacy layout: Spark's own committer (writeTokenBucketed), no manifest
-    val legacy = (0L until 60L).map(i => (i % 7, s"L$i"))
-    TokenLayout.writeTokenBucketed(
-      legacy.toDF("pk", "v"), "pk", dir)
-    assert(TokenRangeSource.currentVersion(dir).isEmpty)
-    assert(load(dir).count() == 60)
-    // first connector append over it: the commit must FIRST pin the
-    // legacy listing as a manifest (so the file moves are invisible),
-    // then flip to the union — a reader can never see a torn batch
-    (100L until 130L).map(i => (i, s"N$i")).toDF("pk", "v")
-      .write.format(fmt).option("pk", "pk").mode("append").save(dir)
-    val v = TokenRangeSource.currentVersion(dir)
-    assert(v.exists(_ >= 2), s"expected legacy-pin + flip manifests, got $v")
-    assert(load(dir).count() == 90)
-    // the legacy rows are manifest-listed (not just physically present)
-    assert(load(dir).filter(col("pk") < 100L).count() == 60)
-
-    // SNAPSHOT read: the legacy-pin version still serves the pre-append
-    // table (old files outlive the flip), and the version list is public
-    val vs = TokenRangeSource.versions(dir)
-    assert(vs == vs.sorted && vs.size >= 2, s"versions: $vs")
-    val pinned = spark.read.format(fmt).option("pk", "pk")
-      .option("version", vs.head.toString).load(dir)
-    assert(pinned.count() == 60, "version-pinned read must see the old table")
-    assert(pinned.queryExecution.executedPlan.toString()
-      .contains(s"Version: ${vs.head}"))
-  }
-
   test("TEXT partition key: users-shaped table, ts/decimal/binary round trip, pruned point lookup") {
     val dir = freshDir()
     val userDdl = "username STRING, user_id BIGINT, balance DECIMAL(12,2), " +
@@ -234,5 +203,25 @@ class TokenRangeAtomicitySpec extends SparkSpec {
     users.foreach { u =>
       assert(colBuckets(u._1) == TokenLayout.bucketOfStringValue(u._1))
     }
+  }
+
+  test("a manifest-less tb=<k> directory is refused on read and on write") {
+    val s2 = spark; import s2.implicits._
+    val dir = freshDir()
+    // Spark's own partitioned writer: bucket dirs, no _manifests
+    (0L until 20L).map(i => (i, s"a$i", TokenLayout.bucketOfValue(i)))
+      .toDF("pk", "v", "tb")
+      .write.mode("overwrite").partitionBy("tb").parquet(dir)
+    def refused(t: Throwable): Boolean = t != null &&
+      (Option(t.getMessage).exists(_.contains("manifest-less")) || refused(t.getCause))
+    val read = intercept[IllegalArgumentException](load(dir).count())
+    assert(refused(read), read.getMessage)
+    val write = intercept[Exception] {
+      Seq((100L, "b")).toDF("pk", "v")
+        .write.format(fmt).option("pk", "pk").mode("append").save(dir)
+    }
+    assert(refused(write), write.getMessage)
+    assert(!TokenRangeSource.manifestDir(dir).exists,
+      "nothing may be published over the retired layout")
   }
 }

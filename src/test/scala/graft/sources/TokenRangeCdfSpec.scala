@@ -121,7 +121,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     val dir = freshDir("graft_cdf_del")
     val ckpt = freshDir("graft_cdf_del_ck")
     append(dir, 0L until 30L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     assert(drainFeed(dir, ckpt).map(_._1).forall(_ == "insert"))
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L, 7L, 11L))
     val changes = drainFeed(dir, ckpt)
@@ -137,7 +137,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     val s2 = spark; import s2.implicits._
     val dir = freshDir("graft_cdf_ups")
     append(dir, 0L until 20L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     // 5 existing keys re-bound, 3 new keys
     val incoming = ((0L until 5L).map(i => (i, s"u$i")) ++
       (100L until 103L).map(i => (i, s"n$i"))).toDF("pk", "v")
@@ -172,7 +172,7 @@ class TokenRangeCdfSpec extends SparkSpec {
       .option("rollRows", "4")
       .option("schema", "pk BIGINT, ts BIGINT, v STRING")
       .mode("append").save(dir)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     // [0,8) covers two whole slabs — the retire-unread fast path; with
     // the feed on they must still be READ and recorded
     TokenRangeOps.deleteCkRange(spark, dir, "pk", 1L, 0L, 8L)
@@ -200,7 +200,7 @@ class TokenRangeCdfSpec extends SparkSpec {
   test("vacuum reaps aged orphan sidecars, keeps referenced and young ones") {
     val dir = freshDir("graft_cdf_vac")
     append(dir, 0L until 12L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L))
     val cdfRoot = new java.io.File(dir, "_cdf")
     val referenced = cdfRoot.listFiles().map(_.getName).toSet
@@ -230,7 +230,7 @@ class TokenRangeCdfSpec extends SparkSpec {
       "TBLPROPERTIES('pk'='pk')")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 24)")
     val path = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
-    TokenRangeOps.enableChangeFeed(path)
+    TableMeta.enableChangeFeed(path)
     spark.sql(s"UPDATE $cat.ks.t SET v = 'patched' WHERE pk = 5")
     spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a9'") // non-key predicate
     val feed = feedBatch(path)
@@ -267,7 +267,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     val s2 = spark; import s2.implicits._
     val dir = freshDir("graft_cdf_alter")
     append(dir, 0L until 12L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L)) // pre-ALTER sidecar
     TokenRangeOps.addColumn(dir, "extra STRING")
     (20L until 24L).map(i => (i, s"a$i", s"x$i")).toDF("pk", "v", "extra")
@@ -294,7 +294,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     // VECTOR-MERGED enable snapshot)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L), mode = "cow")
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L), mode = "dv")
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     val enableV = TokenRangeSource.versions(dir).last
     // post-enable history: an append and a recorded delete
     append(dir, 20L until 24L)
@@ -333,7 +333,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     val dir = freshDir("graft_cdf_seedrl")
     append(dir, 0L until 10L)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L), mode = "cow") // unservable
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     append(dir, 10L until 12L)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
     val q = spark.readStream.format(fmt).option("pk", "pk")
@@ -363,7 +363,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(2L), mode = "cow")
     val vUnservable = TokenRangeSource.versions(dir).last
     append(dir, 100L until 102L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     val enableV = TokenRangeSource.versions(dir).last
     append(dir, 8L until 10L)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L)) // recorded (sidecar)
@@ -408,7 +408,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     // all-servable pre-enable history: appends only
     append(dir, 0L until 4L)
     append(dir, 4L until 8L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     append(dir, 8L until 12L)
     // from-zero feed with a 1-version cap: every version is servable, so
     // no seed fires and every micro-batch must hold exactly one version
@@ -456,7 +456,7 @@ class TokenRangeCdfSpec extends SparkSpec {
     val dir = freshDir("graft_cdf_restart")
     val ckpt = freshDir("graft_cdf_restart_ck")
     append(dir, 0L until 8L)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     assert(drainFeed(dir, ckpt).count(_._1 == "insert") == 8)
     // stop; a delete and an append land; resume on the same checkpoint
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(0L, 1L))

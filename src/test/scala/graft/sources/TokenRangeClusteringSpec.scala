@@ -69,7 +69,7 @@ class TokenRangeClusteringSpec extends SparkSpec {
       .write.format(fmt).option("pk", "pk").option("ck", "seq")
       .option("schema", "pk BIGINT, seq BIGINT, v STRING")
       .mode("append").save(dir)
-    assert(TokenRangeSource.recordedCk(dir).contains("seq ASC"))
+    assert(TableMeta.load(dir).ck.contains("seq ASC"))
 
     // a later write that CONTRADICTS the recorded ck is refused (CQL
     // fixes clustering at CREATE); one that declares nothing inherits it
@@ -108,13 +108,13 @@ class TokenRangeClusteringSpec extends SparkSpec {
       .write.format(fmt).option("pk", "pk")
       .option("schema", "pk BIGINT, seq BIGINT, v STRING")
       .mode("append").save(dir)
-    assert(TokenRangeSource.recordedCk(dir).isEmpty)
+    assert(TableMeta.load(dir).ck.isEmpty)
     // FIRST declaration records (not first commit — r14 review: the
     // create-iff-absent properties file silently dropped late declarers)
     Seq((2L, 20L, "b")).toDF("pk", "seq", "v")
       .write.format(fmt).option("pk", "pk").option("ck", "seq")
       .mode("append").save(dir)
-    assert(TokenRangeSource.recordedCk(dir).contains("seq ASC"))
+    assert(TableMeta.load(dir).ck.contains("seq ASC"))
     // a contradicting later declaration is refused from now on
     val ex = intercept[Exception] {
       Seq((3L, 30L, "c")).toDF("pk", "seq", "v")
@@ -171,7 +171,7 @@ class TokenRangeClusteringSpec extends SparkSpec {
       .option("rollRows", "32")
       .option("schema", "pk BIGINT, seq BIGINT, v STRING")
       .mode("append").save(dir)
-    assert(TokenRangeSource.recordedCk(dir).contains("seq DESC"))
+    assert(TableMeta.load(dir).ck.contains("seq DESC"))
     // physical order is DESCENDING inside each bucket file
     val files = TokenRangeSource.visibleFiles(dir).map(_._2)
     files.take(4).foreach { f =>
@@ -216,7 +216,7 @@ class TokenRangeClusteringSpec extends SparkSpec {
       .option("rollRows", "16")
       .option("schema", "pk BIGINT, c1 BIGINT, c2 BIGINT, v STRING")
       .mode("append").save(dir)
-    assert(TokenRangeSource.recordedCk(dir).contains("c1 ASC,c2 DESC"))
+    assert(TableMeta.load(dir).ck.contains("c1 ASC,c2 DESC"))
     // lexicographic (c1 asc, c2 desc) inside each file
     val f = TokenRangeSource.visibleFiles(dir).head._2
     val rows = spark.read.parquet(f).select("c1", "c2").collect()

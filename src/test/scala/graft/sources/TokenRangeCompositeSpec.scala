@@ -318,11 +318,11 @@ class TokenRangeCompositeSpec extends SparkSpec {
   test("snapshot reads stay exact across the legacy→segmented transition") {
     val s2 = spark; import s2.implicits._
     val dir = freshDir()
-    // legacy table (Spark committer, no manifest), then two connector
-    // commits: v1 pins the legacy listing (flat lines), v2/v3 are
-    // incremental segmented rebases
-    TokenLayout.writeTokenBucketed(
-      (0L until 100L).map(i => (i, s"a$i")).toDF("pk", "v"), "pk", dir)
+    // three connector commits: v1 the first write, v2 an append, v3 a
+    // delete — each an incremental segmented rebase of the one before
+    (0L until 100L).map(i => (i, s"a$i")).toDF("pk", "v")
+      .write.format(fmt).option("pk", "pk")
+      .option("schema", "pk BIGINT, v STRING").mode("append").save(dir)
     Seq((1000L, "x")).toDF("pk", "v")
       .write.format(fmt).option("pk", "pk").mode("append").save(dir)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(7L))
@@ -331,9 +331,9 @@ class TokenRangeCompositeSpec extends SparkSpec {
     def at(v: Int) = spark.read.format(fmt).option("pk", "pk")
       .option("version", v.toString).load(dir)
       .select("pk").collect().map(_.getLong(0)).toSet
-    // v1 = the pinned legacy listing, exactly
+    // v1 = the first write, exactly
     assert(at(vs.head) == (0L until 100L).toSet)
-    // the append's version sees legacy + new row (mixed flat+pointer)
+    // the append's version sees the first write + the new row
     assert(at(vs(1)) == (0L until 100L).toSet + 1000L)
     // the delete's version drops exactly key 7
     assert(at(vs(2)) == (0L until 100L).toSet + 1000L - 7L)

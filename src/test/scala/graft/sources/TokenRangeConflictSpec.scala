@@ -219,13 +219,16 @@ class TokenRangeConflictSpec extends SparkSpec {
   test("legacy table with a tb=__HIVE_DEFAULT_PARTITION__ dir errors descriptively") {
     val s2 = spark; import s2.implicits._
     val dir = freshDir("graft_tr_conflict_hive")
-    TokenLayout.writeTokenBucketed(
-      (0L until 20L).map(i => (i, s"a$i")).toDF("pk", "v"), "pk", dir)
-    // the classic legacy-layout defect: a null-key partition dir
+    (0L until 20L).map(i => (i, s"a$i")).toDF("pk", "v")
+      .write.format(fmt).option("pk", "pk")
+      .option("schema", "pk BIGINT, v STRING").mode("append").save(dir)
+    // the classic layout defect: a null-key partition dir (Spark's own
+    // partitioned writer names NULL keys so)
     val bad = new java.io.File(dir, "tb=__HIVE_DEFAULT_PARTITION__")
     bad.mkdirs()
+    // vacuum lists the bucket dirs to find the files no version references
     val ex = intercept[IllegalArgumentException] {
-      load(dir).count()
+      TokenRangeOps.vacuum(dir, TokenRangeSource.versions(dir).max)
     }
     assert(ex.getMessage.contains("non-numeric bucket dir")
       && ex.getMessage.contains("__HIVE_DEFAULT_PARTITION__"),

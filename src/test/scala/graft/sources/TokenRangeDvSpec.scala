@@ -228,7 +228,7 @@ class TokenRangeDvSpec extends SparkSpec {
       q.awaitTermination(); got.get()
     }
     assert(drain() == 32)
-    TokenRangeOps.enableChangeFeed(dir)
+    TableMeta.enableChangeFeed(dir)
     TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(9L), mode = "dv")
     // the plain tail (fresh, no feed option) refuses the vector version
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_dv_ck2").toString
@@ -263,31 +263,6 @@ class TokenRangeDvSpec extends SparkSpec {
     assert(t.filter(col("a") === 2L && col("b") === 3L).count() == 0L)
     assert(t.filter(col("a") === 5L && col("b") === 0L).count() == 0L)
     assert(t.filter(col("a") === 2L && col("b") === 4L).count() == 1L)
-  }
-
-  test("a pk-less legacy table never takes the vector path (review r16: the silent brick)") {
-    val s2 = spark; import s2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dv_legacy").toString
-    // legacy layout: Spark's own committer, no manifest, NO recorded pk
-    TokenLayout.writeTokenBucketed(
-      (0L until 24L).map(i => (i, s"a$i")).toDF("pk", "v"), "pk", dir)
-    assert(TokenRangeSource.recordedPk(dir).isEmpty)
-    // explicit dv mode refuses loudly while no pk is recorded
-    val ex = intercept[IllegalArgumentException] {
-      TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(5L), mode = "dv")
-    }
-    assert(ex.getMessage.contains("recorded pk"), ex.getMessage)
-    // auto mode must FALL BACK to copy-on-write (a vector would make
-    // every read — including compaction — refuse for lack of the pk);
-    // the cow rewrite's sink commit then RECORDS the pk, so later small
-    // deletes graduate to the vector path legitimately
-    TokenRangeOps.deleteKeys(spark, dir, "pk", Seq(3L))
-    assert(TokenRangeSource.dvBindings(dir).isEmpty,
-      "no vector may publish without a recorded pk")
-    val t = spark.read.format(fmt).option("pk", "pk").load(dir)
-    assert(t.count() == 23L && t.filter(col("pk") === 3L).count() == 0L)
-    assert(TokenRangeSource.recordedPk(dir).isDefined,
-      "the cow rewrite records the pk — the table has graduated")
   }
 
   test("vector-only publishes carry bound buckets' segments by reference (no rewrite amplification)") {
@@ -351,7 +326,7 @@ class TokenRangeDvSpec extends SparkSpec {
   test("vector sweep: a file past the binding bound auto-compacts (the policy ACTS on the debt)") {
     val dir = freshTable("sweep")
     // a tight bound so the test drives the threshold crossing
-    TokenRangeOps.setVectorCompaction(dir, 3)
+    TableMeta.setVectorCompaction(dir, 3)
     // three point deletes of keys in the SAME bucket accumulate three
     // bindings on that bucket's files; the third commit's sweep must
     // compact them — without any manual compact call

@@ -99,7 +99,7 @@ class TokenRangeMaintenanceSpec extends SparkSpec {
   test("retention policy bounds version history across repeated commits, newest stay readable") {
     val s2 = spark; import s2.implicits._
     val dir = freshDir("graft_tr_ret")
-    TokenRangeOps.setRetention(dir, 3)
+    TableMeta.setRetention(dir, 3)
     (0 until 8).foreach { i =>
       Seq((i.toLong, s"r$i")).toDF("pk", "v")
         .write.format(fmt).option("pk", "pk")
@@ -154,7 +154,7 @@ class TokenRangeMaintenanceSpec extends SparkSpec {
     assert(ex.getMessage.contains("no version published"))
 
     // describeTable aggregates the recorded metadata
-    TokenRangeOps.setRetention(dir, 5)
+    TableMeta.setRetention(dir, 5)
     val d = TokenRangeOps.describeTable(dir)
     assert(d("pk") == "pk" && d("retention") == "5")
     assert(d("schema").contains("v:string"))

@@ -101,27 +101,6 @@ class TokenRangeSchemaSpec extends SparkSpec {
     assert(compacted == after.toSet)
   }
 
-  test("a legacy table's first connector commit records the TABLE's schema, not the write's") {
-    val s2 = spark; import s2.implicits._
-    // legacy layout: Spark's own committer, no manifest, no properties
-    val dir = freshDir("graft_tr_sch4")
-    val df = (0L until 32L).map(i => (i, s"v$i", i * 1.5)).toDF("pk", "v", "w")
-    TokenLayout.writeTokenBucketed(df, "pk", dir)
-    // first connector write binds ONLY (pk, v): the recorded creation
-    // schema must still be the legacy table's full (pk, v, w) — a subset
-    // append must never shrink what inference (and rewrites) see
-    Seq((100L, "x")).toDF("pk", "v")
-      .write.format(fmt).option("pk", "pk").mode("append").save(dir)
-    val t = load(dir)
-    assert(t.schema.fieldNames.toSeq == Seq("pk", "v", "w"))
-    assert(t.filter(col("pk") === 5L).select("w").collect().head.getDouble(0) == 7.5)
-    // and a rewrite (upsert) carries w for untouched rows
-    TokenRangeOps.upsert(spark, dir, "pk",
-      Seq((100L, "y", 0.0)).toDF("pk", "v", "w"))
-    assert(load(dir).filter(col("pk") === 5L)
-      .select("w").collect().head.getDouble(0) == 7.5)
-  }
-
   test("a case-drifted append is read back by value, not as NULLs") {
     val s2 = spark; import s2.implicits._
     val dir = freshDir("graft_tr_sch5")
@@ -229,22 +208,22 @@ class TokenRangeSchemaSpec extends SparkSpec {
   test("schema edits are version-pinned: time travel serves each version's own schema (ADVICE r14)") {
     val s2 = spark; import s2.implicits._
     val dir = freshDir("graft_tr_sch10")
-    seed(dir) // publishes v1 (empty pin) + v2 (the 32 rows)
+    seed(dir) // publishes v1 (the 32 rows)
     TokenRangeOps.addColumn(dir, "score DOUBLE") // edit 1
     Seq((100L, "w", 2.5)).toDF("pk", "v", "score")
-      .write.format(fmt).option("pk", "pk").mode("append").save(dir) // v3
-    val Seq(_, v2, v3) = TokenRangeSource.versions(dir)
+      .write.format(fmt).option("pk", "pk").mode("append").save(dir) // v2
+    val Seq(vPre, vPost) = TokenRangeSource.versions(dir)
     // pinned PRE-ALTER: the column did not exist at v2 — it must not appear
-    val atV2 = spark.read.format(fmt).option("pk", "pk")
-      .option("version", v2.toString).load(dir)
-    assert(atV2.schema.fieldNames.toSeq == Seq("pk", "v"),
-      s"v$v2 predates the ADD; got ${atV2.schema.fieldNames.toSeq}")
-    assert(atV2.count() == 32)
+    val atPre = spark.read.format(fmt).option("pk", "pk")
+      .option("version", vPre.toString).load(dir)
+    assert(atPre.schema.fieldNames.toSeq == Seq("pk", "v"),
+      s"v$vPre predates the ADD; got ${atPre.schema.fieldNames.toSeq}")
+    assert(atPre.count() == 32)
     // pinned POST-ALTER: sees it, with the bound value
-    val atV3 = spark.read.format(fmt).option("pk", "pk")
-      .option("version", v3.toString).load(dir)
-    assert(atV3.schema.fieldNames.toSeq == Seq("pk", "v", "score"))
-    assert(atV3.filter(col("pk") === 100L)
+    val atPost = spark.read.format(fmt).option("pk", "pk")
+      .option("version", vPost.toString).load(dir)
+    assert(atPost.schema.fieldNames.toSeq == Seq("pk", "v", "score"))
+    assert(atPost.filter(col("pk") === 100L)
       .select("score").collect().head.getDouble(0) == 2.5)
     // DROP v (metadata-only, no new version): the CURRENT view loses it,
     // but the pinned pre-drop version must still read the stored values —
@@ -252,7 +231,7 @@ class TokenRangeSchemaSpec extends SparkSpec {
     TokenRangeOps.dropColumn(dir, "v") // edit 2
     assert(load(dir).schema.fieldNames.toSeq == Seq("pk", "score"))
     val pinned = spark.read.format(fmt).option("pk", "pk")
-      .option("version", v3.toString).load(dir)
+      .option("version", vPost.toString).load(dir)
     assert(pinned.schema.fieldNames.toSeq == Seq("pk", "v", "score"),
       "a pinned pre-DROP snapshot serves its own schema, not the current one")
     assert(pinned.filter(col("pk") === 5L).select("v")

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * 10⁶ files). Structural proofs on a many-file table: a single-bucket
   * commit writes ONE new segment + a ≤16-line version file and carries
   * every untouched bucket's pointer verbatim; reads resolve identically;
-  * legacy flat manifests rebase incrementally; vacuum reaps dead
-  * segments. */
+  * vacuum reaps dead segments; a version file in a retired format fails
+  * loudly. */
 class TokenRangeSegmentSpec extends SparkSpec {
   private val fmt = classOf[TokenRangeSource].getName
 
@@ -21,7 +21,7 @@ class TokenRangeSegmentSpec extends SparkSpec {
     val sd = new java.io.File(TokenRangeSource.manifestDir(dir), "segments")
     Option(sd.listFiles()).getOrElse(Array.empty).map(_.getName).toSet
   }
-  /** DATA lines of a version file (pointer/flat lines). Every published
+  /** DATA lines of a version file (pointer lines). Every published
     * manifest also carries exactly one `#edits <n>` metadata header
     * (r15 — the version's schema pin), asserted here so the header
     * contract can't silently drift. */
@@ -64,30 +64,6 @@ class TokenRangeSegmentSpec extends SparkSpec {
     assert(rels.count(_._1 == 3) == 501)
   }
 
-  test("legacy flat manifests rebase incrementally: untouched flat lines carry, touched fold into a segment") {
-    val s2 = spark; import s2.implicits._
-    val dir = freshDir()
-    // legacy table: Spark's own committer, no manifest
-    TokenLayout.writeTokenBucketed(
-      (0L until 300L).map(i => (i, s"a$i")).toDF("pk", "v"), "pk", dir)
-    val legacyCount = TokenRangeSource.visibleRelFiles(dir, None).size
-    assert(TokenRangeSource.versions(dir).isEmpty)
-    // first connector append (touches the buckets of keys 9000-9009)
-    (9000L until 9010L).map(i => (i, s"b$i")).toDF("pk", "v")
-      .write.format(fmt).option("pk", "pk").mode("append").save(dir)
-    val v = TokenRangeSource.versions(dir).max
-    val lines = versionBody(dir, v)
-    val (ptrs, flats) = lines.partition(_.startsWith("@"))
-    assert(flats.nonEmpty,
-      "untouched legacy buckets must carry as verbatim flat lines (no mass conversion)")
-    assert(ptrs.nonEmpty, "touched buckets must fold into segments")
-    // read equivalence: everything visible exactly once
-    val all = spark.read.format(fmt).option("pk", "pk").load(dir).collect()
-    assert(all.length == 310)
-    assert(all.map(_.getAs[Long]("pk")).toSet
-      == ((0L until 300L) ++ (9000L until 9010L)).toSet)
-  }
-
   test("vacuum reaps segments referenced by no retained version") {
     val dir = freshDir()
     val big = for (k <- 0 until 16; i <- 0 until 20) yield f"tb=$k/g$i%02d.parquet"
@@ -104,10 +80,28 @@ class TokenRangeSegmentSpec extends SparkSpec {
     assert(after.size < before,
       s"dead segment generations must be reaped ($before -> ${after.size})")
     // exactly the live version's referenced segments survive
-    assert(after == TokenRangeSource.referencedSegments(dir, vMax)
+    assert(after == TokenRangeSource.readVersion(dir, vMax).segments
       .map(_.stripPrefix("segments/")),
       "surviving segments must be exactly the retained version's references")
     // and the table still reads in full
     assert(TokenRangeSource.visibleRelFiles(dir, Some(vMax)).size == 16 * 20 + 3)
+  }
+
+  test("a version file without its #edits/#op headers, or with a bare data-file line, fails loudly") {
+    val dir = freshDir()
+    val v = TokenRangeSource.publishManifest(dir, Seq("tb=1/a.parquet"),
+      truncate = false)
+    val mf = new java.io.File(TokenRangeSource.manifestDir(dir), s"v$v.manifest")
+    val lines = new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
+      .split('\n').toSeq.filter(_.nonEmpty)
+    def refused(body: Seq[String], what: String): Unit = {
+      java.nio.file.Files.write(mf.toPath, body.mkString("", "\n", "\n").getBytes("UTF-8"))
+      val ex = intercept[IllegalStateException](TokenRangeSource.visibleRelFiles(dir))
+      assert(ex.getMessage.contains(mf.getPath) && ex.getMessage.contains(what),
+        ex.getMessage)
+    }
+    refused(lines.filterNot(_.startsWith("#edits ")), "#edits")
+    refused(lines.filterNot(_.startsWith("#op ")), "#op")
+    refused(lines :+ "tb=2/b.parquet", "bare data-file line")
   }
 }

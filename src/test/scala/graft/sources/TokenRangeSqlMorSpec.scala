@@ -111,7 +111,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
       TBLPROPERTIES('pk'='pk', 'dml'='mor')""")
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 16)")
     val path = tablePath(wh, "t")
-    TokenRangeOps.enableChangeFeed(path)
+    TableMeta.enableChangeFeed(path)
     spark.sql(s"UPDATE $cat.ks.t SET v = 'new5' WHERE pk = 5")
     spark.sql(s"DELETE FROM $cat.ks.t WHERE v = 'a9'")
     val feed = spark.sql(s"SELECT _change_type, pk, v FROM $cat.ks.`t$$changes`")
@@ -243,7 +243,7 @@ class TokenRangeSqlMorSpec extends SparkSpec {
         TBLPROPERTIES('pk'='pk', 'dml'='mor', 'dml.fallback_rows'='$bound')""")
       spark.sql(s"INSERT INTO $cat.ks.$name SELECT id, concat('a', id) " +
         "FROM range(0, 16)")
-      TokenRangeOps.enableChangeFeed(tablePath(wh, name))
+      TableMeta.enableChangeFeed(tablePath(wh, name))
       // matches 4 rows: vector path on 'small', cow fallback on 'big'
       spark.sql(s"UPDATE $cat.ks.$name SET v = 'z' WHERE pk % 4 = 0")
     }

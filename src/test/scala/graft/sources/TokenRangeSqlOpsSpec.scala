@@ -24,7 +24,7 @@ class TokenRangeSqlOpsSpec extends SparkSpec {
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING)
       TBLPROPERTIES('pk'='pk', 'insert'='upsert')""")
     val path = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
-    TokenRangeOps.enableChangeFeed(path)
+    TableMeta.enableChangeFeed(path)
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 16)")
     val before = TokenRangeOps.liveFiles(path).toSet
     // the second INSERT overlaps keys 8..15: CQL semantics = replaced
@@ -74,7 +74,7 @@ class TokenRangeSqlOpsSpec extends SparkSpec {
       TBLPROPERTIES('pk'='channel', 'ck'='msg', 'insert'='upsert')""")
     val path = new java.io.File(new java.io.File(wh, "ks"), "msgs")
       .getAbsolutePath
-    TokenRangeOps.enableChangeFeed(path)
+    TableMeta.enableChangeFeed(path)
     // 4 channels × 6 messages
     spark.sql(s"INSERT INTO $cat.ks.msgs " +
       "SELECT id % 4, id DIV 4, concat('v1-', id % 4, '-', id DIV 4) " +
@@ -146,7 +146,7 @@ class TokenRangeSqlOpsSpec extends SparkSpec {
     spark.sql(s"""CREATE TABLE $cat.ks.t (pk BIGINT, v STRING)
       TBLPROPERTIES('pk'='pk', 'insert'='upsert', 'dml.fallback_rows'='8')""")
     val path = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
-    TokenRangeOps.enableChangeFeed(path)
+    TableMeta.enableChangeFeed(path)
     spark.sql(s"INSERT INTO $cat.ks.t SELECT id, concat('a', id) FROM range(0, 16)")
     val before = TokenRangeOps.liveFiles(path).toSet
     // 12 distinct keys > the 8-key bound: the SAME statement completes

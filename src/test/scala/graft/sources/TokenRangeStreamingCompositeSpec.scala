@@ -45,15 +45,15 @@ class TokenRangeStreamingCompositeSpec extends SparkSpec {
       .start()
     q.awaitTermination()
 
-    // one version per micro-batch (+ the legacy pin v1): counts walk the
-    // exact prefix sums — every batch atomic, none torn, none merged
+    // one version per micro-batch: counts walk the exact prefix sums —
+    // every batch atomic, none torn, none merged
     val vs = TokenRangeSource.versions(dir)
-    assert(vs.size == 5, s"4 batches must publish 4 versions after the pin, got $vs")
+    assert(vs.size == 4, s"4 batches must publish 4 versions, got $vs")
     val counts = vs.map { v =>
       spark.read.format(fmt).option("pk", "user_id,etype")
         .option("version", v.toString).load(dir).count()
     }
-    assert(counts == Seq(0L, 256L, 512L, 768L, 1024L),
+    assert(counts == Seq(256L, 512L, 768L, 1024L),
       s"versioned counts must be batch prefix sums, got $counts")
 
     // tuple-equality point lookup prunes to ONE bucket through the scan
@@ -69,7 +69,7 @@ class TokenRangeStreamingCompositeSpec extends SparkSpec {
     val f = TokenRangeSource.visibleFiles(dir).head._2
     val seqs = spark.read.parquet(f).select("seq").collect().map(_.getLong(0))
     assert(seqs.sameElements(seqs.sorted), s"rows inside $f must be ck-sorted")
-    assert(TokenRangeSource.recordedCk(dir).contains("seq ASC"))
-    assert(TokenRangeSource.recordedPk(dir).contains("user_id,etype"))
+    assert(TableMeta.load(dir).ck.contains("seq ASC"))
+    assert(TableMeta.load(dir).pk.contains("user_id,etype"))
   }
 }

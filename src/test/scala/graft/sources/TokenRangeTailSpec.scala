@@ -81,7 +81,7 @@ class TokenRangeTailSpec extends SparkSpec {
     // options cannot extend a catalog table's schema, so the feed gets
     // its own name — Iceberg's `t.history` idiom)
     val path = new java.io.File(new java.io.File(wh, "ks"), "t").getAbsolutePath
-    TokenRangeOps.enableChangeFeed(path)
+    TableMeta.enableChangeFeed(path)
     spark.sql(s"DELETE FROM $cat.ks.t WHERE pk = 3") // pk fast path, sidecar
     // batch SQL first: SELECT over the feed relation works by name
     val sqlFeed = spark.sql(
